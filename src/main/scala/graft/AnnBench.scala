@@ -1,6 +1,5 @@
 package graft
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN probe-set benchmark: per-query latency vs batched throughput for
@@ -15,17 +14,8 @@ import org.apache.spark.sql.functions._
 object AnnBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val nProbes = sys.env.getOrElse("SPARK_GRAFT_ANN_PROBES", "16").toInt
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession()
 
     val emb = Tables.embeddings(spark, sfDir)
     val probesDf = emb.filter(col("vec_id") < nProbes)

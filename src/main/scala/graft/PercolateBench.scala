@@ -2,7 +2,7 @@ package graft
 
 import graft.search.Percolate
 import graft.streaming.PercolateStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming-percolator load benchmark: the indexed tier's stream-static
@@ -24,17 +24,9 @@ import org.apache.spark.sql.functions._
   */
 object PercolateBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rps = sys.env.getOrElse("SPARK_GRAFT_PERC_RPS", "20000").toInt
     val secs = sys.env.getOrElse("SPARK_GRAFT_PERC_SECS", "45").toInt
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession()
     import spark.implicits._
 
     val vocab = Seq(
@@ -67,7 +59,7 @@ object PercolateBench {
       spark.readStream
         .format("rate")
         .option("rowsPerSecond", rps)
-        .option("numPartitions", cpus.toInt)
+        .option("numPartitions", spark.sparkContext.defaultParallelism)
         .load()
         .select(
           col("value").as("doc_id"),

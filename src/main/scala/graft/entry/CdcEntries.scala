@@ -1,22 +1,10 @@
 package graft
 
 import graft.cdc.CdcBatch
-import graft.functions.{TextFns, VectorFns}
-import graft.multimodal.Binary
-import graft.operators.{Dedup, MinHashLSH, SimHash, Similarity}
-import graft.search.{Aggs, IndexMapping, JsonDsl, SearchDsl}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-
-import graft.EntrySupport._
-
-/** CDC core (the reference's own surface).
-  * Split out of the monolithic SparkEntry registry (round 10)
-  * purely mechanically — entry bodies and oracle SQL are
-  * byte-identical; SparkEntry aggregates the family maps.
-  */
+/** CDC core (the reference's own surface). */
 private[graft] object CdcEntries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -145,7 +133,7 @@ private[graft] object CdcEntries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = SharedOracles.withSharers(Map(
     "cdc_latest_state" ->
       """SELECT user_id, event_id, ts, event_type, value
         |FROM (SELECT user_id, event_id, ts, event_type, value,
@@ -218,5 +206,5 @@ private[graft] object CdcEntries {
         |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prior_value
         |  FROM u) t
         |WHERE side = 0 ORDER BY user_id, event_id""".stripMargin
-  )
+  ))
 }

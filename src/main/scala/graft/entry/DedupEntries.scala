@@ -1,22 +1,13 @@
 package graft
 
-import graft.cdc.CdcBatch
-import graft.functions.{TextFns, VectorFns}
-import graft.multimodal.Binary
+import graft.functions.TextFns
 import graft.operators.{Dedup, MinHashLSH, SimHash, Similarity}
-import graft.search.{Aggs, IndexMapping, JsonDsl, SearchDsl}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
 
 import graft.EntrySupport._
 
-/** Deduplication (training-data pipeline).
-  * Split out of the monolithic SparkEntry registry (round 10)
-  * purely mechanically — entry bodies and oracle SQL are
-  * byte-identical; SparkEntry aggregates the family maps.
-  */
+/** Deduplication (training-data pipeline). */
 private[graft] object DedupEntries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -193,7 +184,7 @@ private[graft] object DedupEntries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = SharedOracles.withSharers(Map(
 
     // SemDeDup FULL replication (r17): the fixed-point Lloyd means
     // (Σ floor(x·10⁶+0.5) integer sums → one double division → REAL) make
@@ -538,5 +529,5 @@ private[graft] object DedupEntries {
         |SELECT x.source AS src_a, y.source AS src_b, count(*) AS n_shared
         |FROM hs x JOIN hs y ON x.h = y.h AND x.source < y.source
         |GROUP BY 1, 2 ORDER BY src_a, src_b""".stripMargin
-  )
+  ))
 }

@@ -1,20 +1,12 @@
 package graft
 
-import graft.cdc.CdcBatch
-import graft.functions.{TextFns, VectorFns}
-import graft.multimodal.Binary
-import graft.operators.{Dedup, MinHashLSH, SimHash, Similarity}
-import graft.search.{Aggs, IndexMapping, JsonDsl, SearchDsl}
+import graft.operators.{Dedup, MinHashLSH, Similarity}
+import graft.search.IndexMapping
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
 
 /** Shared cross-entry support: memoized index artifacts, derived
   * frames, and oracle-SQL fragments the family registries consume.
-  * Split out of the monolithic SparkEntry registry (round 10)
-  * purely mechanically — entry bodies and oracle SQL are
-  * byte-identical; SparkEntry aggregates the family maps.
   */
 private[graft] object EntrySupport {
 
@@ -425,10 +417,10 @@ private[graft] object EntrySupport {
     s"(${terms.mkString(" + ")}) % 2 = 1"
   }
 
-  /** The geohash_grid oracle, shared by the structured and wire entries —
-    * the same integer pipeline as Aggs.geohash5 re-derived in DuckDB SQL:
-    * quantize hundredth-degree ints to 12/13 bits, interleave (lon bit k
-    * → weight 4^k, lat bit k → weight 2·4^k), base32.
+  /** The geohash_grid oracle — the same integer pipeline as
+    * Aggs.geohash5 re-derived in DuckDB SQL: quantize hundredth-degree
+    * ints to 12/13 bits, interleave (lon bit k → weight 4^k, lat bit k →
+    * weight 2·4^k), base32.
     */
   lazy val geohashGridOracleSql: String = {
     def spread(c: String, bits: Int, mult: Long) =
@@ -565,32 +557,4 @@ private[graft] object EntrySupport {
       |  "n_chars": {"type": "long"}
       |}}}""".stripMargin
   )
-
-  // Shared by the structured entry and its JSON-body twin (same
-  // parameters → same oracle).
-  val adjacencyMatrixSql: String =
-    """WITH a AS (SELECT
-      |  CAST(count(*) FILTER (WHERE lang = 'en') AS BIGINT) AS c_en,
-      |  CAST(count(*) FILTER (WHERE n_chars > 300) AS BIGINT) AS c_long,
-      |  CAST(count(*) FILTER (WHERE source = 'src1') AS BIGINT) AS c_src1,
-      |  CAST(count(*) FILTER (WHERE lang = 'en' AND n_chars > 300) AS BIGINT) AS c_en_long,
-      |  CAST(count(*) FILTER (WHERE lang = 'en' AND source = 'src1') AS BIGINT) AS c_en_src1,
-      |  CAST(count(*) FILTER (WHERE n_chars > 300 AND source = 'src1') AS BIGINT) AS c_long_src1
-      |FROM documents)
-      |SELECT key, doc_count FROM (
-      |  SELECT 'en' AS key, c_en AS doc_count FROM a
-      |  UNION ALL SELECT 'long', c_long FROM a
-      |  UNION ALL SELECT 'src1', c_src1 FROM a
-      |  UNION ALL SELECT 'en&long', c_en_long FROM a
-      |  UNION ALL SELECT 'en&src1', c_en_src1 FROM a
-      |  UNION ALL SELECT 'long&src1', c_long_src1 FROM a) t
-      |WHERE doc_count > 0 ORDER BY key""".stripMargin
-
-  val boxplotSql: String =
-    """SELECT round(min(l_extendedprice), 2) AS min_v,
-      |       round(quantile_cont(l_extendedprice, 0.25), 6) AS q1,
-      |       round(quantile_cont(l_extendedprice, 0.5), 6) AS q2,
-      |       round(quantile_cont(l_extendedprice, 0.75), 6) AS q3,
-      |       round(max(l_extendedprice), 2) AS max_v
-      |FROM lineitem""".stripMargin
 }

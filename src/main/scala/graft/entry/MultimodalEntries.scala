@@ -1,22 +1,10 @@
 package graft
 
-import graft.cdc.CdcBatch
-import graft.functions.{TextFns, VectorFns}
 import graft.multimodal.Binary
-import graft.operators.{Dedup, MinHashLSH, SimHash, Similarity}
-import graft.search.{Aggs, IndexMapping, JsonDsl, SearchDsl}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-
-import graft.EntrySupport._
-
-/** Multimodal binary-column operators.
-  * Split out of the monolithic SparkEntry registry (round 10)
-  * purely mechanically — entry bodies and oracle SQL are
-  * byte-identical; SparkEntry aggregates the family maps.
-  */
+/** Multimodal binary-column operators. */
 private[graft] object MultimodalEntries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -93,7 +81,7 @@ private[graft] object MultimodalEntries {
         .orderBy("a", "b"))
   )
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = SharedOracles.withSharers(Map(
 
     "mm_binary_meta" ->
       """SELECT doc_id AS id, CAST(octet_length(CAST(text AS BLOB)) AS INTEGER) AS n_bytes,
@@ -188,5 +176,5 @@ private[graft] object MultimodalEntries {
         |FROM pairs p JOIN sizes sa ON p.a = sa.id JOIN sizes sb ON p.b = sb.id
         |WHERE p.shared >= ceil(0.5 * least(sa.n_tiles, sb.n_tiles))
         |ORDER BY p.a, p.b""".stripMargin
-  )
+  ))
 }

@@ -1,22 +1,14 @@
 package graft
 
-import graft.cdc.CdcBatch
 import graft.functions.{TextFns, VectorFns}
-import graft.multimodal.Binary
-import graft.operators.{Dedup, MinHashLSH, SimHash, Similarity}
-import graft.search.{Aggs, IndexMapping, JsonDsl, SearchDsl}
+import graft.search.{Aggs, JsonDsl, SearchDsl}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-
 import graft.EntrySupport._
 
-/** Search / query DSL, structured form + endpoints + monitors.
-  * Split out of the monolithic SparkEntry registry (round 10)
-  * purely mechanically — entry bodies and oracle SQL are
-  * byte-identical; SparkEntry aggregates the family maps.
-  */
+/** Search / query DSL, structured form + endpoints + monitors. */
 private[graft] object SearchEntries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -2269,7 +2261,7 @@ private[graft] object SearchEntries {
       ))
   )
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = SharedOracles.withSharers(Map(
 
     "search_match" ->
       """SELECT doc_id, score FROM (
@@ -2650,14 +2642,6 @@ private[graft] object SearchEntries {
         |  FROM orders) t
         |WHERE rank <= 3 ORDER BY o_orderpriority, rank""".stripMargin,
 
-    "search_top_hits_native" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice, rank FROM (
-        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |         CAST(row_number() OVER (PARTITION BY o_orderpriority
-        |              ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rank
-        |  FROM orders) t
-        |WHERE rank <= 3 ORDER BY o_orderpriority, rank""".stripMargin,
-
     "search_date_histogram_tz" ->
       """SELECT CAST((date_trunc('day', (ts AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York')
         |             AT TIME ZONE 'America/New_York') AT TIME ZONE 'UTC' AS TIMESTAMP) AS bucket,
@@ -2922,7 +2906,23 @@ private[graft] object SearchEntries {
         |       round(coalesce(dcg / (SELECT v FROM idcg), 0.0), 6) AS ndcg_at_10
         |FROM m""".stripMargin,
 
-    "search_adjacency_matrix" -> adjacencyMatrixSql,
+    "search_adjacency_matrix" ->
+      """WITH a AS (SELECT
+        |  CAST(count(*) FILTER (WHERE lang = 'en') AS BIGINT) AS c_en,
+        |  CAST(count(*) FILTER (WHERE n_chars > 300) AS BIGINT) AS c_long,
+        |  CAST(count(*) FILTER (WHERE source = 'src1') AS BIGINT) AS c_src1,
+        |  CAST(count(*) FILTER (WHERE lang = 'en' AND n_chars > 300) AS BIGINT) AS c_en_long,
+        |  CAST(count(*) FILTER (WHERE lang = 'en' AND source = 'src1') AS BIGINT) AS c_en_src1,
+        |  CAST(count(*) FILTER (WHERE n_chars > 300 AND source = 'src1') AS BIGINT) AS c_long_src1
+        |FROM documents)
+        |SELECT key, doc_count FROM (
+        |  SELECT 'en' AS key, c_en AS doc_count FROM a
+        |  UNION ALL SELECT 'long', c_long FROM a
+        |  UNION ALL SELECT 'src1', c_src1 FROM a
+        |  UNION ALL SELECT 'en&long', c_en_long FROM a
+        |  UNION ALL SELECT 'en&src1', c_en_src1 FROM a
+        |  UNION ALL SELECT 'long&src1', c_long_src1 FROM a) t
+        |WHERE doc_count > 0 ORDER BY key""".stripMargin,
 
     "search_auto_date_histogram" ->
       """WITH span AS (SELECT min(ts) AS lo, max(ts) AS hi FROM events),
@@ -2949,7 +2949,13 @@ private[graft] object SearchEntries {
       """WITH m AS (SELECT quantile_cont(o_totalprice, 0.5) AS md FROM orders)
         |SELECT round(quantile_cont(abs(o_totalprice - md), 0.5), 6) AS mad FROM orders, m""".stripMargin,
 
-    "search_boxplot" -> boxplotSql,
+    "search_boxplot" ->
+      """SELECT round(min(l_extendedprice), 2) AS min_v,
+        |       round(quantile_cont(l_extendedprice, 0.25), 6) AS q1,
+        |       round(quantile_cont(l_extendedprice, 0.5), 6) AS q2,
+        |       round(quantile_cont(l_extendedprice, 0.75), 6) AS q3,
+        |       round(max(l_extendedprice), 2) AS max_v
+        |FROM lineitem""".stripMargin,
 
     "search_rate" ->
       """SELECT bucket, doc_count,
@@ -3738,5 +3744,5 @@ private[graft] object SearchEntries {
         |                    + ((user_id * 7) % 250) * 256 + (event_id % 254 + 1) AS DOUBLE) AS ipnum
         |        FROM events) i) t
         |WHERE bucket IS NOT NULL GROUP BY bucket ORDER BY bucket""".stripMargin
-  )
+  ))
 }

@@ -1,22 +1,14 @@
 package graft
 
-import graft.cdc.CdcBatch
-import graft.functions.{TextFns, VectorFns}
-import graft.multimodal.Binary
-import graft.operators.{Dedup, MinHashLSH, SimHash, Similarity}
-import graft.search.{Aggs, IndexMapping, JsonDsl, SearchDsl}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.TextFns
+import graft.operators.Dedup
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-
 import graft.EntrySupport._
 
-/** Text analysis, sampling, and curation.
-  * Split out of the monolithic SparkEntry registry (round 10)
-  * purely mechanically — entry bodies and oracle SQL are
-  * byte-identical; SparkEntry aggregates the family maps.
-  */
+/** Text analysis, sampling, and curation. */
 private[graft] object TextEntries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -721,7 +713,7 @@ private[graft] object TextEntries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = SharedOracles.withSharers(Map(
 
     "sample_weighted" ->
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_kept FROM documents
@@ -795,19 +787,6 @@ private[graft] object TextEntries {
         |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id, count(*) AS n_shared
         |FROM cg JOIN bench_g USING (gram)
         |GROUP BY 1, 2 ORDER BY doc_id, chunk_id""".stripMargin,
-
-    // The bloom path is exact end-to-end (prune + confirm), so it shares
-    // the same oracle as text_decontaminate.
-    "text_decontaminate_bloom" ->
-      """WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents),
-        |g AS (SELECT doc_id,
-        |             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-        |                                   for i in generate_series(1, len(t) - 3)])) AS gram
-        |      FROM toks WHERE len(t) >= 4),
-        |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id < 10)
-        |SELECT g.doc_id, count(*) AS n_shared
-        |FROM g JOIN bench USING (gram) WHERE g.doc_id >= 10
-        |GROUP BY 1 ORDER BY doc_id""".stripMargin,
 
     "text_pii_redact" ->
       """SELECT c_custkey AS id,
@@ -1171,5 +1150,5 @@ private[graft] object TextEntries {
         |FROM joint JOIN lm USING (w1) JOIN rm USING (w2) CROSS JOIN tot
         |WHERE c12 >= 20
         |ORDER BY pmi DESC, w1, w2 LIMIT 20""".stripMargin
-  )
+  ))
 }

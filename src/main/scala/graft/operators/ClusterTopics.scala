@@ -45,13 +45,12 @@ object ClusterTopics {
     // The corpus doc count is independent of the k-means training jobs —
     // run it concurrently with the Lloyd collects (r19; guide §2.6
     // overlap independent jobs) instead of as one more serial action.
-    val nDocsF = scala.concurrent.Future(docs.count().toDouble)(scala.concurrent.ExecutionContext.global)
-    val idx = Similarity.ivfIndexKMeans(emb, embIdCol, vecCol, k, iters)
+    val (idx, nDocs) =
+      Overlap(emb.sparkSession)(Similarity.ivfIndexKMeans(emb, embIdCol, vecCol, k, iters))(docs.count().toDouble)
     val assigned = idx.assigned.select(col(embIdCol).as("_cid"), col("cell"))
     val docTerms = graft.Tables
       .ensureParallelism(docs.select(col(docIdCol).as("_cid"), col(textCol).as("_t")))
       .select(col("_cid"), explode(array_distinct(TextFns.tokens(col("_t")))).as("term"))
-    val nDocs = scala.concurrent.Await.result(nDocsF, scala.concurrent.duration.Duration.Inf)
     val corpusDf = docTerms.groupBy("term").agg(count(lit(1)).as("df"))
     val sizes = assigned.groupBy("cell").agg(count(lit(1)).as("n_docs"))
     val cellTerm = docTerms.join(assigned, "_cid").groupBy("cell", "term").agg(count(lit(1)).as("cf"))

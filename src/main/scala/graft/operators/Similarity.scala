@@ -681,7 +681,7 @@ object Similarity {
     // of the centroid TakeOrdered (residual math is driver-side, after
     // both land), so the two driver actions run concurrently (r19;
     // guide §2.6 — the opqIndexFull pattern).
-    val sampleRowsF = scala.concurrent.Future {
+    val (ivf, sampleRows) = Overlap(emb.sparkSession)(ivfIndex(emb, idCol, vecCol, nLists)) {
       emb
         .select(col(idCol), col(vecCol))
         .filter(col(vecCol).isNotNull)
@@ -693,21 +693,18 @@ object Similarity {
         )
         .limit(ksub)
         .collect()
-    }(scala.concurrent.ExecutionContext.global)
-    val ivf = ivfIndex(emb, idCol, vecCol, nLists)
+    }
     val cents = ivf.centroids
     val dim = cents(0).length
     require(dim % m == 0, s"embedding dim $dim must divide into $m subspaces")
     val dsub = dim / m
     // Each seed entry is the double residual rounded to float: the value
     // DuckDB spells CAST(v[d] - c[d] AS REAL) over the same parquet.
-    val sample = scala.concurrent.Await
-      .result(sampleRowsF, scala.concurrent.duration.Duration.Inf)
-      .map { r =>
-        val v = r.getSeq[Float](1)
-        val c = cents(nearestCell(cents, v))
-        Array.tabulate(v.length)(j => (v(j).toDouble - (if (j < c.length) c(j).toDouble else 0.0)).toFloat)
-      }
+    val sample = sampleRows.map { r =>
+      val v = r.getSeq[Float](1)
+      val c = cents(nearestCell(cents, v))
+      Array.tabulate(v.length)(j => (v(j).toDouble - (if (j < c.length) c(j).toDouble else 0.0)).toFloat)
+    }
     var books = Array.tabulate(m)(mi => sample.map(_.slice(mi * dsub, (mi + 1) * dsub)))
     // Persisted (r18): the refit scan(s) and the final encode each
     // re-read the source otherwise (values unchanged; see opqIndexFull).
@@ -1027,15 +1024,14 @@ object Similarity {
     // residual math below is driver-side, after both jobs land), so the
     // two driver actions run concurrently (r19; guide §2.6 overlap
     // independent jobs) instead of back-to-back.
-    val seedRowsF = scala.concurrent.Future {
+    val (ivf, seedRows) = Overlap(emb.sparkSession)(ivfIndex(emb, idCol, vecCol, nLists)) {
       emb
         .select(col(idCol), col(vecCol))
         .filter(col(vecCol).isNotNull)
         .orderBy(pmod(hash(col(idCol), lit(17)), lit(1 << 30)).asc, col(idCol))
         .limit(ksub)
         .collect()
-    }(scala.concurrent.ExecutionContext.global)
-    val ivf = ivfIndex(emb, idCol, vecCol, nLists)
+    }
     val cents = ivf.centroids
     val dim = cents(0).length
     require(dim % m == 0, s"embedding dim $dim must divide into $m subspaces")
@@ -1064,13 +1060,11 @@ object Similarity {
     // the OPQ rotation training below is driver-side iterative float
     // math, so this path stays replica-tier regardless of the seed's
     // SQL-replayability. Every refinement below is corpus-scale.
-    val seed = scala.concurrent.Await
-      .result(seedRowsF, scala.concurrent.duration.Duration.Inf)
-      .map { r =>
-        val v = r.getSeq[Float](1)
-        val c = cents(nearestCell(cents, v))
-        Array.tabulate(v.length)(j => v(j).toDouble - (if (j < c.length) c(j).toDouble else 0.0))
-      }
+    val seed = seedRows.map { r =>
+      val v = r.getSeq[Float](1)
+      val c = cents(nearestCell(cents, v))
+      Array.tabulate(v.length)(j => v(j).toDouble - (if (j < c.length) c(j).toDouble else 0.0))
+    }
     var books: Array[Array[Array[Double]]] = Array.tabulate(m)(mi => seed.map(_.slice(mi * dsub, (mi + 1) * dsub)))
     val identity = Array.tabulate(dim, dim)((a, b) => if (a == b) 1.0 else 0.0)
     var rot = identity
@@ -2041,11 +2035,9 @@ object Similarity {
     // driver actions (Lloyd collects, census, candidate join) whose tails
     // the other's jobs back-fill. Values are unchanged — each build's own
     // job trajectory is untouched.
-    val topF = scala.concurrent.Future(graphIndex(topNodes, idCol, vecCol, m, nLists))(
-      scala.concurrent.ExecutionContext.global
-    )
-    val bottom = graphIndex(emb, idCol, vecCol, m, nLists)
-    Graph2Index(scala.concurrent.Await.result(topF, scala.concurrent.duration.Duration.Inf), bottom)
+    val (bottom, top) =
+      Overlap(emb.sparkSession)(graphIndex(emb, idCol, vecCol, m, nLists))(graphIndex(topNodes, idCol, vecCol, m, nLists))
+    Graph2Index(top, bottom)
   }
 
   /** Descend the two-layer graph: beam the top layer briefly, hand its

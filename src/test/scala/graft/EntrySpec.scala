@@ -14,6 +14,21 @@ class EntrySpec extends SparkSpec {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("every shared oracle is declared once in SharedOracles, and nowhere else") {
+    val aliases = SharedOracles.aliases
+    val declared = aliases.keySet ++ aliases.values
+    val oracle = SparkEntry.oracleSql
+    val unknown = declared.filterNot(k => SparkEntry.queries.contains(k) && oracle.contains(k))
+    assert(unknown.isEmpty, s"alias or target without a query and an oracle: $unknown")
+    val chained = aliases.filter { case (_, target) => aliases.contains(target) }
+    assert(chained.isEmpty, s"alias pointing at an alias: $chained")
+    val diverged = aliases.filter { case (key, target) => oracle(key) != oracle(target) }
+    assert(diverged.isEmpty, s"alias whose oracle differs from its target's: ${diverged.keySet}")
+    // Keys with equal oracle text must be one target plus its aliases.
+    val undeclared = oracle.groupBy(_._2).values.map(_.keySet).filter(_.count(k => !aliases.contains(k)) > 1)
+    assert(undeclared.isEmpty, s"${undeclared.size} undeclared oracle copies: ${undeclared.mkString("; ")}")
+  }
+
   test("no SF-scaling table carries a broadcast hint (customer/supplier/part — AQE decides)") {
     // customer (150k×SF), supplier (10k×SF) and part (200k×SF) all grow
     // with SF — billions of rows at the 100 TB design point — so a

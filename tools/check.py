@@ -12,6 +12,8 @@ import json
 import sys
 import glob
 import os
+import re
+import tempfile
 
 import duckdb
 
@@ -23,6 +25,17 @@ import duckdb
 # sum over integers) that passed this replica but failed the driver — the
 # guard below makes that class of red reproduce locally.
 PANDAS_DIVERGENT_TYPES = {"HUGEINT", "UHUGEINT"}
+
+
+# GRAFT_CHECK_MEM is spliced into a SET statement, so only a plain DuckDB
+# size (<number><unit>) gets through.
+MEMORY_LIMIT = re.compile(r"\d+(\.\d+)?(B|KB|MB|GB|TB|KiB|MiB|GiB|TiB)", re.IGNORECASE)
+
+
+def memory_limit(value):
+    if not MEMORY_LIMIT.fullmatch(value):
+        raise SystemExit(f"GRAFT_CHECK_MEM={value!r}: expected <number><unit>, e.g. 8GB or 512MiB")
+    return value
 
 
 def norm_cell(v):
@@ -68,6 +81,15 @@ def selftest():
     parquet has no int128, so it can only ever appear on the oracle side,
     where a pandas driver floats it while the Spark side stays integral.
     Hence only HUGEINT/UHUGEINT hard-fail the gate."""
+    for good in ("8GB", "512MiB", "1.5gb"):
+        assert memory_limit(good) == good
+    for bad in ("", "8", "GB", "-1GB", "8 GB", "8GB'; SET threads=1; --"):
+        try:
+            memory_limit(bad)
+        except SystemExit:
+            continue
+        raise AssertionError(f"GRAFT_CHECK_MEM accepted {bad!r}")
+    print("ok       GRAFT_CHECK_MEM rejects anything but <number><unit>")
     con = duckdb.connect()
     cases = {
         "BOOLEAN": "SELECT true AS v UNION ALL SELECT false",
@@ -120,8 +142,10 @@ def main():
     # DuckDB spill instead of die).
     mem = os.environ.get("GRAFT_CHECK_MEM")
     if mem:
-        con.execute(f"SET memory_limit='{mem}'")
-        con.execute(f"SET temp_directory='/tmp/duckdb_spill'")
+        con.execute(f"SET memory_limit='{memory_limit(mem)}'")
+        # this run's own spill directory, removed when the run ends
+        spill = tempfile.TemporaryDirectory(prefix="graft_check_spill_")
+        con.execute(f"SET temp_directory='{spill.name}'")
     thr = os.environ.get("GRAFT_CHECK_THREADS")
     if thr:
         con.execute(f"SET threads={int(thr)}")
